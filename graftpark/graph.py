@@ -42,6 +42,31 @@ def choose_strategy(n_vertices: int, broadcast_state: bool | None = None) -> boo
     return n_vertices <= BROADCAST_V_LIMIT
 
 
+def resolve_strategy(
+    spark: SparkSession,
+    strategy: str,
+    n_vertices: int,
+    broadcast_state: bool | None,
+    block_dir: str | None,
+) -> str:
+    """Execution path of an iterative kernel: ``'packed'`` or ``'dataframe'``.
+
+    ``'auto'`` picks packed above the broadcast limit. Packed block dirs
+    default to driver-local tmp, which is not shared storage on a
+    multi-node master, so auto picks packed only on a local master or
+    when the caller supplies an explicit (shared) ``block_dir``.
+    """
+    if strategy not in ("auto", "packed", "dataframe"):
+        raise ValueError(
+            f"unknown strategy {strategy!r}: expected 'auto', 'packed' or 'dataframe'"
+        )
+    if strategy != "auto":
+        return strategy
+    blocks_ok = spark.sparkContext.master.startswith("local") or block_dir is not None
+    big = not choose_strategy(n_vertices, broadcast_state)
+    return "packed" if (big and blocks_ok) else "dataframe"
+
+
 def maybe_broadcast(df: DataFrame, enabled: bool) -> DataFrame:
     return F.broadcast(df) if enabled else df
 

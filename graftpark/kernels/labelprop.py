@@ -13,11 +13,9 @@ single partition.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, functions as F
 
-from graftpark.graph import Graph, choose_strategy, maybe_broadcast
+from graftpark.graph import Graph, choose_strategy, maybe_broadcast, resolve_strategy
 from graftpark.loop import Checkpointer, LoopResult, iterate, resume_point
 
 
@@ -31,31 +29,20 @@ def label_propagation(
     broadcast_state: bool | None = None,
     strategy: str = "auto",
     block_dir: str | None = None,
-    arrow_native: bool | None = None,
 ) -> LoopResult:
-    """State: ``(id, label, prev_label)``; result = select(id, label)."""
+    """State: ``(id, label, prev_label)``; result = select(id, label).
+
+    ``strategy`` is ``'auto'``, ``'packed'`` or ``'dataframe'``
+    (``graph.resolve_strategy``).
+    """
     spark = graph.spark
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     n = graph.num_vertices()
-    if strategy == "auto":
-        # csr/packed block dirs default to driver-local tmp — only auto-pick
-        # them on a local master or with an explicit (shared-storage)
-        # block_dir. Packed is the at-scale path and (round 4) wires the
-        # durable PackedCheckpointer, so checkpoint_dir no longer downgrades
-        # the strategy.
-        blocks_ok = spark.sparkContext.master.startswith("local") or block_dir is not None
-        if not choose_strategy(n, broadcast_state) and blocks_ok:
-            strategy = "packed"
-        else:
-            strategy = "dataframe"
-    if strategy == "csr":
-        return _lp_csr(
-            graph, max_supersteps, checkpoint_dir, checkpoint_every, resume, n_part, block_dir
-        )
+    strategy = resolve_strategy(spark, strategy, n, broadcast_state, block_dir)
     if strategy == "packed":
         return _lp_packed(
             graph, max_supersteps, n_part, block_dir,
-            checkpoint_dir, checkpoint_every, resume, arrow_native,
+            checkpoint_dir, checkpoint_every, resume,
         )
     use_bc = choose_strategy(n, broadcast_state)
     graph.persist_for_iteration(n_part, key=None if use_bc else "src")
@@ -131,124 +118,6 @@ def label_propagation(
     )
 
 
-def _lp_csr(
-    graph: Graph,
-    max_supersteps: int,
-    checkpoint_dir: str | None,
-    checkpoint_every: int,
-    resume: bool,
-    n_part: int,
-    block_dir: str | None,
-) -> LoopResult:
-    """CSR-block mode propagation (north_star strategy; SURVEY.md §2.9).
-
-    Gather stage emits per-(dst, label) neighbor counts from the
-    worker-cached symmetrized blocks (one lexsort per bucket — labels
-    change every superstep, so the (group, label) pairs cannot be
-    pre-sorted); the keyed reduce merges counts across buckets and picks
-    the mode with min-label tie-break, all vectorized. Shares its block
-    directory layout with connected components (same symmetrized edges).
-    """
-    import tempfile
-
-    from graftpark.blocks import bucket_col, combine_mode, ensure_edge_blocks, mode_gather_fn
-    from graftpark.kernels.pagerank import _superstep_confs
-
-    spark = graph.spark
-    if block_dir is None:
-        block_dir = tempfile.mkdtemp(prefix="graftpark-blocks-sym-")
-    # complete-and-matching check (see components._cc_csr): crashed partial
-    # writes and directed-vs-symmetrized block_dir mixups rebuild loudly
-    ensure_edge_blocks(graph.edges_sym(), n_part, block_dir, sym=True, stats=graph.edge_stats(sym=True))
-
-    init = (
-        graph.vertices()
-        .select(
-            "id",
-            F.col("id").alias("label"),
-            F.lit(None).cast("long").alias("prev_label"),
-            bucket_col("id", n_part).cast("int").alias("bucket"),
-        )
-        .repartition(n_part, "bucket")
-    )
-    checkpointer = Checkpointer(checkpoint_dir, every=checkpoint_every) if checkpoint_dir else None
-    start, initial_metrics, state0 = 1, None, init
-    if resume and checkpointer is not None:
-        rp = resume_point(checkpointer, spark)
-        if rp is not None:
-            state0, last, initial_metrics = rp
-            start = last + 1
-
-    state_schema = "id long, label long, prev_label long, bucket int"
-
-    def step(state: DataFrame, i: int) -> DataFrame:
-        # union (not cogroup): binary plan nodes multiply Catalyst size
-        # stats — squares per superstep under localCheckpoint (see pagerank)
-        def finish(key, pdf):
-            import pandas as pd
-
-            own_mask = pdf["own"].to_numpy()
-            carriers = pdf[own_mask]
-            partials = pdf[~own_mask]
-            if len(carriers) == 0:
-                return pd.DataFrame({c: [] for c in ("id", "label", "prev_label", "bucket")})
-            ids, winners, prev = combine_mode(partials, carriers)
-            import numpy as np
-
-            return pd.DataFrame(
-                {
-                    "id": ids,
-                    "label": winners,
-                    "prev_label": prev,
-                    "bucket": np.full(len(ids), int(key[0]), dtype=np.int32),
-                }
-            )
-
-        partials = state.groupBy("bucket").applyInPandas(
-            mode_gather_fn(block_dir, "label"),
-            schema="dst long, label long, cnt long, bucket int",
-        ).select("dst", "label", "cnt", F.lit(False).alias("own"), "bucket")
-        carriers = state.select(
-            F.col("id").alias("dst"),
-            F.col("label"),
-            F.lit(0).cast("long").alias("cnt"),
-            F.lit(True).alias("own"),
-            "bucket",
-        )
-        return (
-            partials.unionByName(carriers)
-            .groupBy("bucket")
-            .applyInPandas(finish, schema=state_schema)
-        )
-
-    def observe_cols() -> dict:
-        return {
-            "changed": F.count(F.when(F.col("label") != F.col("prev_label"), True)),
-            "num_labels_approx": F.approx_count_distinct("label"),
-        }
-
-    def stats(observed: dict, prev: DataFrame, i: int) -> dict:
-        changed = int(observed["changed"])
-        return {
-            "delta": float(changed),
-            "active": changed,
-            "num_labels_approx": int(observed["num_labels_approx"]),
-        }
-
-    with _superstep_confs(spark, n_part):
-        return iterate(
-            state0,
-            step,
-            stats,
-            converged_fn=lambda rec: rec["active"] == 0,
-            max_supersteps=max_supersteps,
-            checkpointer=checkpointer,
-            start_superstep=start,
-            initial_metrics=initial_metrics,
-            observe_cols=observe_cols,
-        )
-
-
 def _lp_packed(
     graph: Graph,
     max_supersteps: int,
@@ -257,7 +126,6 @@ def _lp_packed(
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 5,
     resume: bool = False,
-    arrow_native: bool | None = None,
 ) -> LoopResult:
     """Packed mode-semiring label propagation — the at-scale LP path.
 
@@ -277,9 +145,7 @@ def _lp_packed(
         ensure_edge_blocks,
         make_packed_checkpointer,
         packed_finish_mode_arrow_fn,
-        packed_finish_mode_fn,
         packed_gather_mode_arrow_fn,
-        packed_gather_mode_fn,
         vertex_sidecar_writer,
     )
     from graftpark.kernels.pagerank import _superstep_confs
@@ -310,27 +176,13 @@ def _lp_packed(
             state0, last, initial_metrics = rp
             start = last + 1
 
-    # arrow_native mirrors the packed-PageRank default: zero-copy payload
-    # serialization via mapInArrow/applyInArrow (same rows, same math —
-    # regression-tested exact equality); GRAFTPARK_PACKED_ARROW=0 or
-    # arrow_native=False restores the pandas-UDF path.
-    if arrow_native is None:
-        arrow_native = os.environ.get("GRAFTPARK_PACKED_ARROW", "1") == "1"
     msg_schema = "bucket int, src_bucket int, payload binary"
-    if arrow_native:
-        gather = packed_gather_mode_arrow_fn(block_dir, n_part)
-        finish = packed_finish_mode_arrow_fn(block_dir, n_part)
+    gather = packed_gather_mode_arrow_fn(block_dir, n_part)
+    finish = packed_finish_mode_arrow_fn(block_dir, n_part)
 
-        def step(state: DataFrame, i: int) -> DataFrame:
-            msgs = state.mapInArrow(gather, schema=msg_schema)
-            return msgs.groupBy("bucket").applyInArrow(finish, schema=PACKED_SCHEMA)
-    else:
-        gather = packed_gather_mode_fn(block_dir, n_part)
-        finish = packed_finish_mode_fn(block_dir, n_part)
-
-        def step(state: DataFrame, i: int) -> DataFrame:
-            msgs = state.mapInPandas(gather, schema=msg_schema)
-            return msgs.groupBy("bucket").applyInPandas(finish, schema=PACKED_SCHEMA)
+    def step(state: DataFrame, i: int) -> DataFrame:
+        msgs = state.mapInArrow(gather, schema=msg_schema)
+        return msgs.groupBy("bucket").applyInArrow(finish, schema=PACKED_SCHEMA)
 
     def observe_cols() -> dict:
         return {"changed": F.sum("active")}

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from graftpark.graph import Graph, choose_strategy, maybe_broadcast
+from graftpark.graph import Graph, choose_strategy, maybe_broadcast, resolve_strategy
 from graftpark.loop import Checkpointer, LoopResult, iterate, resume_point
 
 
@@ -39,12 +39,16 @@ def pagerank(
     block_dir: str | None = None,
     steps_per_job: int = 1,
     payload_dtype: str = "float64",
-    arrow_native: bool | None = None,
 ) -> LoopResult:
     """Ranks sum to 1 over the full vertex set (isolated vertices included).
 
     Returns LoopResult whose state is ``(id, rank, out_deg, prev_rank)``;
     select ``(id, rank)`` for the result table.
+
+    ``strategy`` is ``'auto'``, ``'packed'`` or ``'dataframe'``
+    (``graph.resolve_strategy``). On the packed path ``steps_per_job``
+    fuses up to that many supersteps into one Spark job; convergence is
+    checked once per job, and the run never exceeds ``max_supersteps``.
 
     Skew handling: with broadcastable state (the default below
     GRAFTPARK_BROADCAST_V_LIMIT vertices) edges stay in balanced
@@ -55,25 +59,13 @@ def pagerank(
     spark = graph.spark
     n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     n = graph.num_vertices()
+    strategy = resolve_strategy(spark, strategy, n, broadcast_state, block_dir)
     if n == 0:
         return LoopResult(state=spark.createDataFrame([], "id LONG, rank DOUBLE"), converged=True)
-    if strategy == "auto":
-        # csr/packed block dirs default to driver-local tmp; on a
-        # multi-node master that path is not shared storage, so auto only
-        # picks them when running locally or when the caller supplies an
-        # explicit (shared) block_dir
-        blocks_ok = spark.sparkContext.master.startswith("local") or block_dir is not None
-        big = not choose_strategy(n, broadcast_state)
-        strategy = "packed" if (big and blocks_ok) else "dataframe"
-    if strategy == "csr":
-        return _pagerank_csr(
-            graph, n, alpha, tol, max_supersteps, checkpoint_dir, checkpoint_every,
-            resume, n_part, block_dir,
-        )
     if strategy == "packed":
         return _pagerank_packed(
             graph, n, alpha, tol, max_supersteps, checkpoint_dir, checkpoint_every,
-            resume, n_part, block_dir, steps_per_job, payload_dtype, arrow_native,
+            resume, n_part, block_dir, steps_per_job, payload_dtype,
         )
     use_bc = choose_strategy(n, broadcast_state)
     graph.persist_for_iteration(n_part, key=None if use_bc else "src", sym=False)
@@ -222,169 +214,6 @@ def _superstep_confs(spark, n_part: int | None = None):
                 spark.conf.set(k, v)
 
 
-def _pagerank_csr(
-    graph: Graph,
-    n: int,
-    alpha: float,
-    tol: float,
-    max_supersteps: int,
-    checkpoint_dir: str | None,
-    checkpoint_every: int,
-    resume: bool,
-    n_part: int,
-    block_dir: str | None,
-) -> LoopResult:
-    """CSR-block strategy (BASELINE.json north_star, SURVEY.md §4.3.3).
-
-    Edges are bucketed by ``pmod(hash(src), P)`` and written ONCE as
-    per-bucket parquet (cluster: shared storage); every superstep is
-
-        state ─groupBy(bucket)→ gather-scatter Arrow UDF over the
-        worker-cached CSR block (np.add.reduceat — no hash table)
-        → compact (dst, partial, dst_bucket) rows
-        ─the ONE keyed shuffle→ cogroup with state by bucket
-        → vectorized combine (np.bincount) → next state
-
-    The edge table never re-shuffles and never re-enters the JVM; the
-    per-superstep JVM work is one compact-partial shuffle plus the
-    V-row observe aggregates.
-    """
-    import tempfile
-
-    from graftpark import blocks as B
-    from graftpark.blocks import bucket_col, combine_sums, ensure_edge_blocks, gather_scatter_fn
-
-    spark = graph.spark
-    if block_dir is None:
-        block_dir = tempfile.mkdtemp(prefix="graftpark-blocks-")
-    ensure_edge_blocks(graph.edges, n_part, block_dir, sym=False, stats=graph.edge_stats(sym=False))
-
-    out_deg = graph.edges.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("out_deg"))
-    init = (
-        graph.vertices()
-        .join(out_deg, "id", "left")
-        .select(
-            "id",
-            F.lit(1.0 / n).alias("rank"),
-            F.coalesce("out_deg", F.lit(0)).alias("out_deg"),
-            F.lit(0.0).alias("prev_rank"),
-            bucket_col("id", n_part).cast("int").alias("bucket"),
-        )
-        .repartition(n_part, "bucket")
-    )
-
-    checkpointer = Checkpointer(checkpoint_dir, every=checkpoint_every) if checkpoint_dir else None
-    start, initial_metrics, state0 = 1, None, init
-    dangling = {"mass": 0.0}
-    if resume and checkpointer is not None:
-        rp = resume_point(checkpointer, spark)
-        if rp is not None:
-            state0, last, initial_metrics = rp
-            start = last + 1
-    if start == 1 or not initial_metrics:
-        # fresh start, or resume whose metrics.jsonl is missing/truncated:
-        # derive dangling mass from the actual state, never default to 0
-        dangling["mass"] = (
-            state0.where(F.col("out_deg") == 0).agg(F.sum("rank")).collect()[0][0] or 0.0
-        )
-    else:
-        dangling["mass"] = initial_metrics[-1]["dangling_mass"]
-
-    def contrib_values(pdf_sorted):
-        import numpy as np
-
-        r = pdf_sorted["rank"].to_numpy()
-        d = pdf_sorted["out_deg"].to_numpy()
-        return np.where(d > 0, r / np.maximum(d, 1), 0.0)
-
-    state_schema = "id long, rank double, out_deg long, prev_rank double, bucket int"
-
-    def step(state: DataFrame, i: int) -> DataFrame:
-        # NOTE: partials and carriers are UNIONed (not cogrouped) before the
-        # keyed reduce. A binary node over two state-derived inputs would
-        # MULTIPLY their Catalyst size statistics; with localCheckpoint
-        # carrying stats forward that squares sizeInBytes every superstep
-        # (BigInteger digits double per step — the driver eventually spends
-        # minutes in BigInteger.multiply). Union ADDS stats: linear growth.
-        base = (1.0 - alpha) / n + alpha * dangling["mass"] / n
-
-        def finish(key, pdf):
-            import time
-
-            import pandas as pd
-
-            from graftpark.blocks import _trace
-
-            t0 = time.perf_counter()
-            is_carrier = pdf["out_deg"].notna().to_numpy()
-            st = pdf[is_carrier]
-            partials = pdf[~is_carrier]
-            if len(st) == 0:
-                return pd.DataFrame(
-                    {c: [] for c in ("id", "rank", "out_deg", "prev_rank", "bucket")}
-                )
-            sums = combine_sums(partials, st.rename(columns={"dst": "id"}))
-            out = pd.DataFrame(
-                {
-                    "id": st["dst"].to_numpy(),
-                    "rank": base + alpha * sums,
-                    "out_deg": st["out_deg"].to_numpy(),
-                    "prev_rank": st["v"].to_numpy(),
-                    "bucket": st["bucket"].to_numpy(),
-                }
-            )
-            _trace("finish", t0, rows_in=len(pdf), rows_out=len(out))
-            return out
-
-        partials = state.groupBy("bucket").applyInPandas(
-            gather_scatter_fn(block_dir, contrib_values, "sum"),
-            schema="dst long, v double, bucket int",
-        ).select("dst", "v", F.lit(None).cast("long").alias("out_deg"), "bucket")
-        carriers = state.select(
-            F.col("id").alias("dst"),
-            F.col("rank").alias("v"),
-            "out_deg",
-            "bucket",
-        )
-        return (
-            partials.unionByName(carriers)
-            .groupBy("bucket")
-            .applyInPandas(finish, schema=state_schema)
-        )
-
-    def observe_cols() -> dict:
-        return {
-            "delta": F.sum(F.abs(F.col("rank") - F.col("prev_rank"))),
-            "dm": F.sum(F.when(F.col("out_deg") == 0, F.col("rank")).otherwise(F.lit(0.0))),
-            "active": F.count(F.when(F.abs(F.col("rank") - F.col("prev_rank")) > tol / n, True)),
-        }
-
-    def stats(observed: dict, prev: DataFrame, i: int) -> dict:
-        dangling["mass"] = observed["dm"] or 0.0
-        return {
-            "delta": float(observed["delta"]),
-            "active": int(observed["active"]),
-            "dangling_mass": dangling["mass"],
-        }
-
-    _ = B  # module kept imported for worker-side cache symbols
-    with _superstep_confs(spark, n_part):
-        return iterate(
-            state0,
-            step,
-            stats,
-            converged_fn=lambda rec: rec["delta"] < tol,
-            max_supersteps=max_supersteps,
-            checkpointer=checkpointer,
-            start_superstep=start,
-            initial_metrics=initial_metrics,
-            observe_cols=observe_cols,
-        )
-
-
-_PACKED_SCHEMA = "bucket int, payload binary, delta double, dangling double, active long"
-
-
 def _pagerank_packed(
     graph: Graph,
     n: int,
@@ -398,11 +227,10 @@ def _pagerank_packed(
     block_dir: str | None,
     steps_per_job: int = 1,
     payload_dtype: str = "float64",
-    arrow_native: bool | None = None,
 ) -> LoopResult:
     """Packed-message CSR strategy — the at-scale execution path.
 
-    Same bucket dataflow as the 'csr' strategy, but vertex state and
+    Edges are written once as per-bucket CSR blocks; vertex state and
     partial sums travel as ONE binary vector per (bucket) / per
     (src_bucket → dst_bucket) pair instead of per-vertex rows: the
     destination-id list of each message is static (derived from the
@@ -412,23 +240,22 @@ def _pagerank_packed(
     dominated the 8→32-core scaling profile disappears, while the
     dataflow stays a plain bucket-keyed Spark shuffle (multi-executor
     semantics unchanged; static block/sidecar npy live on shared
-    storage in a cluster deployment).
+    storage in a cluster deployment). Gather and finish are Arrow UDFs
+    (``mapInArrow`` / ``applyInArrow``) with zero-copy payloads.
 
     Checkpoints expand to per-vertex (id, rank) parquet (north_rule:
     durable, per-partition lineage, resumable); the returned
     LoopResult.state is likewise the expanded per-vertex DataFrame.
     """
-    import os
     import tempfile
 
     from graftpark.blocks import (
+        PACKED_SCHEMA,
         bucket_col,
         ensure_edge_blocks,
         make_packed_checkpointer,
         packed_finish_arrow_fn,
-        packed_finish_fn,
         packed_gather_arrow_fn,
-        packed_gather_fn,
         vertex_sidecar_writer,
     )
 
@@ -469,33 +296,30 @@ def _pagerank_packed(
 
     # superstep-independent UDFs: the damping base is derived inside the
     # reduce from the dangling-mass broadcast rows, so ``k`` supersteps
-    # chain into ONE query (one driver roundtrip, one lineage truncation).
-    # arrow_native=True routes through mapInArrow/applyInArrow (same rows,
-    # zero-copy payload serialization — blocks.py packed_gather_arrow_fn);
-    # GRAFTPARK_PACKED_ARROW=0 falls back to the pandas UDF path.
-    if arrow_native is None:
-        arrow_native = os.environ.get("GRAFTPARK_PACKED_ARROW", "1") == "1"
+    # chain into ONE query (one driver roundtrip, one lineage truncation)
     msg_schema = "bucket int, src_bucket int, payload binary"
-    if arrow_native:
-        gather = packed_gather_arrow_fn(block_dir, n_part, payload_dtype)
-        finish = packed_finish_arrow_fn(block_dir, n_part, n, alpha, tol / n, payload_dtype)
+    gather = packed_gather_arrow_fn(block_dir, n_part, payload_dtype)
+    finish = packed_finish_arrow_fn(block_dir, n_part, n, alpha, tol / n, payload_dtype)
 
-        def one_superstep(state: DataFrame) -> DataFrame:
-            msgs = state.mapInArrow(gather, schema=msg_schema)
-            return msgs.groupBy("bucket").applyInArrow(finish, schema=_PACKED_SCHEMA)
-    else:
-        gather = packed_gather_fn(block_dir, n_part, payload_dtype)
-        finish = packed_finish_fn(block_dir, n_part, n, alpha, tol / n, payload_dtype)
+    def steps_before(records: list[dict], i: int) -> int:
+        # supersteps run by jobs 1..i-1; a job with no record counts as full
+        ran = {m["superstep"]: m.get("supersteps_in_job", k) for m in records}
+        return sum(ran.get(j, k) for j in range(1, i))
 
-        def one_superstep(state: DataFrame) -> DataFrame:
-            msgs = state.mapInPandas(gather, schema=msg_schema)
-            return msgs.groupBy("bucket").applyInPandas(finish, schema=_PACKED_SCHEMA)
+    # jobs run k supersteps each from where the checkpoint left off (a
+    # resumed run may follow a short job); the last job is cut short so
+    # a run never passes max_supersteps
+    done = steps_before(initial_metrics or [], start)
+    n_jobs = start - 1 + max(0, -(-(max_supersteps - done) // k))
+
+    def job_len(i: int) -> int:
+        return min(k, max_supersteps - done - (i - start) * k)
 
     def step(state: DataFrame, i: int) -> DataFrame:
-        out = state
-        for _ in range(k):
-            out = one_superstep(out)
-        return out
+        for _ in range(job_len(i)):
+            msgs = state.mapInArrow(gather, schema=msg_schema)
+            state = msgs.groupBy("bucket").applyInArrow(finish, schema=PACKED_SCHEMA)
+        return state
 
     def observe_cols() -> dict:
         return {
@@ -509,10 +333,9 @@ def _pagerank_packed(
             "delta": float(observed["delta"]),
             "active": int(observed["active"]),
             "dangling_mass": float(observed["dm"] or 0.0),
-            "supersteps_in_job": k,
+            "supersteps_in_job": job_len(i),
         }
 
-    n_jobs = -(-max_supersteps // k)
     with _superstep_confs(spark, n_part):
         res = iterate(
             state0,
@@ -527,15 +350,17 @@ def _pagerank_packed(
         )
     vdf.unpersist()
     if k > 1:
-        # normalize job-level metrics to per-superstep records (delta /
-        # dangling reflect the job's LAST superstep; walls are amortized)
+        # normalize job-level metrics to per-superstep records numbered by
+        # the supersteps actually run (delta / dangling reflect the job's
+        # LAST superstep; walls are amortized)
         metrics = []
         for rec in res.metrics:
             kk = rec.get("supersteps_in_job", k)
+            first = steps_before(res.metrics, rec["superstep"]) + 1
             for j in range(kk):
                 metrics.append(
                     {
-                        "superstep": (rec["superstep"] - 1) * kk + j + 1,
+                        "superstep": first + j,
                         "wall_s": rec["wall_s"] / kk,
                         **({"delta": rec["delta"], "active": rec["active"],
                             "dangling_mass": rec["dangling_mass"]} if j == kk - 1 else {}),
@@ -546,7 +371,7 @@ def _pagerank_packed(
     return LoopResult(
         state=expand_df(res.state),
         metrics=metrics,
-        supersteps=res.supersteps * k,
+        supersteps=done + sum(job_len(i) for i in range(start, res.supersteps + 1)),
         converged=res.converged,
     )
 
